@@ -8,6 +8,10 @@ order-insensitive value-hash -> CORRECTNESS_r{N}.json).
 The real registry lives in
 ``dissertation_data_pipeline_spark/plans/registry.py`` — one named query
 per implemented SURVEY §2 operator, each paired with its DuckDB oracle.
+``queries()`` and ``oracle_sql()`` return them in registration order.
+There is no ordering policy: ``tools/check_correctness.py`` runs the
+same comparison over all of them on every change, so no query needs to
+come first.
 """
 
 from __future__ import annotations

@@ -41,11 +41,17 @@ sampled variant is what the engine ships and oracle-checks.
 from __future__ import annotations
 
 import hashlib
+import re
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from dissertation_data_pipeline_spark.session import pin_spread
+
+
+#: Column names ``lsh_bucket``'s SQL-text build may splice in
+#: backtick-quoted as-is; anything else resolves through ``F.col``.
+_BARE_IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
 
 
 def _c(col: Column | str) -> Column:
@@ -129,13 +135,17 @@ def lsh_bucket(vec: Column | str, planes: list[list[float]]) -> Column:
     plan-build time alone.  The parsed tree is node-identical to the
     Column build (same literal doubles via shortest-repr, same cast/
     multiply/left-fold/CASE nodes), so bucket values are bit-identical
-    — pinned by test_lsh_bucket_expr_parity.  Column inputs and
+    — pinned by test_lsh_bucket_expr_parity.  Column inputs, names
+    that are not a bare identifier (a dotted struct field, a quoted or
+    backtick-bearing name — ``F.col`` owns their resolution), and
     non-finite coefficients keep the slow-but-general path (the
     ``_lit_doubles`` contract)."""
     import math
 
-    if isinstance(vec, str) and all(
-        math.isfinite(float(c)) for plane in planes for c in plane
+    if (
+        isinstance(vec, str)
+        and _BARE_IDENT.fullmatch(vec)
+        and all(math.isfinite(float(c)) for plane in planes for c in plane)
     ):
         terms = []
         for j, plane in enumerate(planes):

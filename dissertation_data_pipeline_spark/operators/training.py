@@ -57,6 +57,13 @@ __all__ = [
 STOPWORDS = ("the", "a", "and", "of", "to")
 
 
+def _tokens(text_col: str) -> Column:
+    """The one tokenizer the long forms share: split on single spaces.
+    Token and bigram statistics that meet in one row (see
+    :func:`repetition_profile`) must come from the same token stream."""
+    return F.split(F.col(text_col), " ")
+
+
 def token_long_form(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
@@ -67,7 +74,7 @@ def token_long_form(
     """
     return df.select(
         F.col(id_col),
-        F.posexplode(F.split(F.col(text_col), " ")).alias("pos", "tok"),
+        F.posexplode(_tokens(text_col)).alias("pos", "tok"),
     )
 
 
@@ -87,7 +94,7 @@ def bigram_long_form(
     the window's exchange used to, and is a no-op cost at scale where
     the scan already arrives in thousands of splits."""
     nparts = df.sparkSession.sparkContext.defaultParallelism
-    tk = F.split(F.col(text_col), " ")
+    tk = _tokens(text_col)
     pre = df.repartition(nparts).select(
         F.col(id_col), tk.alias("_tk"), F.size(tk).alias("_n")
     )

@@ -295,32 +295,27 @@ def test_runtime_bloom_filter_injects(spark):
                 spark.conf.set(k, v)
 
 
-def test_pin_spread_ab_toggle_same_results(spark):
-    """spark.graft.unpinnedAB=true must change only the physical spread
-    (A/B attribution for the bench), never the rows."""
-    from dissertation_data_pipeline_spark.plans.registry import QUERIES
-
-    fn = QUERIES["ext_minhash_lsh_pairs"].fn
-    sf = "/root/testdata/sf0.001"
-    try:
-        spark.conf.set("spark.graft.unpinnedAB", "false")
-        pinned = {tuple(r) for r in fn(spark, sf).collect()}
-        spark.conf.set("spark.graft.unpinnedAB", "true")
-        unpinned = {tuple(r) for r in fn(spark, sf).collect()}
-    finally:
-        spark.conf.set("spark.graft.unpinnedAB", "false")
-    assert pinned == unpinned
-
-
 def test_pin_spread_unpinned_identity_without_cols(spark):
     from dissertation_data_pipeline_spark.session import pin_spread
 
     df = spark.range(10)
-    try:
-        spark.conf.set("spark.graft.unpinnedAB", "true")
-        assert pin_spread(df) is df  # pure round-robin spread -> no-op
-    finally:
-        spark.conf.set("spark.graft.unpinnedAB", "false")
     out = pin_spread(df)
     n = int(spark.conf.get("spark.sql.shuffle.partitions"))
     assert out.rdd.getNumPartitions() == n
+
+
+def test_pin_spread_hashes_by_cols_at_pinned_count(spark):
+    """With columns, the spread is a hash repartition by them at the
+    session's shuffle-partition count, fixed at call time so AQE
+    cannot coalesce it."""
+    from dissertation_data_pipeline_spark.session import pin_spread
+
+    saved = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", "3")
+        out = pin_spread(spark.range(40).withColumnRenamed("id", "k"), "k")
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", saved)
+    assert re.search(r"hashpartitioning\(k#\d+L?, 3\)", plan_str(out))
+    assert out.rdd.getNumPartitions() == 3
+    assert sorted(r.k for r in out.collect()) == list(range(40))

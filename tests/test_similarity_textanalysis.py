@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from dissertation_data_pipeline_spark.operators import similarity as sim
@@ -247,10 +248,12 @@ def test_pq_codes_cover_and_selfencode_exactly(spark, sf_dir):
 
 def test_lsh_bucket_expr_parity(spark, sf_dir):
     """lsh_bucket's server-side SQL build (one expr parse per call,
-    taken for plain column names) must emit bit-identical buckets to
+    taken for bare column names) must emit bit-identical buckets to
     the per-plane Column build (still taken for Column inputs) — the
     parsed tree is claimed node-identical, and every ANN/LSH family
-    query rides on that claim."""
+    query rides on that claim.  Names that are not a bare identifier
+    (a struct field, a backtick-bearing column) must resolve to the
+    same buckets instead of being spliced into a broken identifier."""
     from pyspark.sql import functions as F
 
     from dissertation_data_pipeline_spark.operators.similarity import (
@@ -259,14 +262,45 @@ def test_lsh_bucket_expr_parity(spark, sf_dir):
     )
     from dissertation_data_pipeline_spark.tables import load_table
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    planes = hyperplanes(40, 64)
-    new = lsh_bucket("embedding", planes)  # str -> expr path
-    old = lsh_bucket(F.col("embedding"), planes)  # Column -> legacy path
-    assert (
-        emb.select(new.alias("a"), old.alias("b")).filter("a <> b").count()
-        == 0
+    emb = load_table(spark, sf_dir, "embeddings").select(
+        "embedding",
+        F.struct("embedding").alias("s"),
+        F.col("embedding").alias("e`mb"),
     )
+    planes = hyperplanes(40, 64)
+    old = lsh_bucket(F.col("embedding"), planes)  # Column -> legacy path
+    names = ("embedding", "s.embedding", "`e``mb`")
+    out = emb.select(
+        old.alias("old"),
+        *(lsh_bucket(n, planes).alias(f"s{i}") for i, n in enumerate(names)),
+        *(
+            lsh_bucket(F.col(n), planes).alias(f"c{i}")
+            for i, n in enumerate(names)
+        ),
+    )
+    differs = " OR ".join(
+        f"{p}{i} <> old" for p in "sc" for i in range(len(names))
+    )
+    assert out.count() > 0
+    assert out.filter(differs).count() == 0
+
+
+@pytest.mark.parametrize(
+    "name, bare",
+    [
+        ("embedding", True),
+        ("_e2", True),
+        ("s.embedding", False),  # struct field: F.col resolves the path
+        ("`e``mb`", False),  # quoted, backtick-bearing name
+        ("e`mb", False),
+        ("2emb", False),
+        ("emb-x", False),
+    ],
+)
+def test_lsh_bucket_fast_path_only_for_bare_identifiers(name, bare):
+    """lsh_bucket splices a string name into SQL text only when it is a
+    bare identifier; every other name takes the Column build."""
+    assert bool(sim._BARE_IDENT.fullmatch(name)) is bare
 
 
 def test_pq_codes_prebuilt_codebook_identical(spark, sf_dir):

@@ -11,12 +11,14 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from dissertation_data_pipeline_spark.operators.training import (
+    bigram_long_form,
     domain_resample,
     gopher_quality_gate,
     pack_sequences,
     repetition_profile,
     scrub_text,
     stratified_sample,
+    token_long_form,
     uniform_hash_u32,
 )
 from dissertation_data_pipeline_spark.tables import load_table
@@ -94,6 +96,42 @@ def test_repetition_profile_detects_repeats(spark):
     assert got[1]["top_bigram_frac"] == 0.75  # "spam spam" 3 of 4
     assert got[2]["distinct_ratio"] == 1.0
     assert got[2]["top_token_frac"] == 0.2
+
+
+def _long_form_docs(spark):
+    return spark.createDataFrame(
+        [(1, "a b a"), (2, "x  y"), (3, "solo"), (4, "")],
+        "doc_id int, text string",
+    )
+
+
+def test_token_long_form_positions(spark):
+    rows = token_long_form(_long_form_docs(spark)).collect()
+    got = sorted(tuple(r) for r in rows)
+    assert got == [
+        (1, 0, "a"), (1, 1, "b"), (1, 2, "a"),
+        (2, 0, "x"), (2, 1, ""), (2, 2, "y"),  # a double space is an empty token
+        (3, 0, "solo"),
+        (4, 0, ""),
+    ]
+
+
+def test_bigram_long_form_pairs_adjacent_tokens(spark):
+    rows = bigram_long_form(_long_form_docs(spark)).collect()
+    got = sorted(tuple(r) for r in rows)
+    assert got == [(1, "a b"), (1, "b a"), (2, " y"), (2, "x ")]
+
+
+def test_long_forms_share_one_token_stream(spark):
+    """repetition_profile puts token and bigram counts in one row, so
+    every document with n >= 2 tokens must have exactly n - 1 bigrams
+    built from the same tokens, empty ones included."""
+    df = _long_form_docs(spark)
+    toks = token_long_form(df).groupBy("doc_id").count().collect()
+    bigs = bigram_long_form(df).groupBy("doc_id").count().collect()
+    n_tok = {r.doc_id: r["count"] for r in toks}
+    n_big = {r.doc_id: r["count"] for r in bigs}
+    assert n_big == {d: n - 1 for d, n in n_tok.items() if n >= 2}
 
 
 def test_scrub_text_removes_urls_and_emails(spark):

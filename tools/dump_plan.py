@@ -1,10 +1,11 @@
-"""Capture `.explain("formatted")` for named queries to plans/r10/.
+"""Capture `.explain("formatted")` for named queries to plans/<ROUND>/.
 
 Usage:
-    python tools/dump_plan_r10.py before|after <name> [<name> ...]
+    python tools/dump_plan.py ROUND before|after <name> [<name> ...]
 
-Writes plans/r10/<name>_<tag>.txt — the judge-checkable evidence for
-every plan claim in OPTIMIZATION_r10.md. Uses sf0.001 (plan shapes are
+Writes plans/<ROUND>/<name>_<tag>.txt (ROUND like ``r10``) — the
+checkable evidence for every plan claim in that round's
+OPTIMIZATION_<ROUND>.md. Uses sf0.001 (plan shapes are
 size-independent modulo AQE's runtime picks, and several queries
 execute eagerly while building — small SF keeps capture cheap).
 """
@@ -14,23 +15,24 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
+PLANS_DIR = os.path.join(REPO, "plans")
 
 
 def main() -> None:
-    tag = sys.argv[1]
-    names = sys.argv[2:]
-    assert tag in ("before", "after"), "first arg must be before|after"
+    if len(sys.argv) < 4 or sys.argv[2] not in ("before", "after"):
+        sys.exit(__doc__)
+    rnd, tag, names = sys.argv[1], sys.argv[2], sys.argv[3:]
 
     from dissertation_data_pipeline_spark.plans.registry import QUERIES
     from dissertation_data_pipeline_spark.session import drop_blocks, get_spark
 
-    spark = get_spark("ddp-dump-plan-r10")
+    spark = get_spark(f"ddp-dump-plan-{rnd}")
     spark.sparkContext.setLogLevel("ERROR")
-    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    outdir = os.path.join(here, "plans", "r10")
+    outdir = os.path.join(PLANS_DIR, rnd)
     os.makedirs(outdir, exist_ok=True)
 
     for name in names:
